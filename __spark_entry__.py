@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from modernsearchengines_spark.functions import text_analysis as ta
 from modernsearchengines_spark.operators import dedup, similarity
+from modernsearchengines_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # shared helpers
@@ -240,8 +241,8 @@ def _payload_index(spark: SparkSession, sf_dir: str):
         F.count(F.lit(1)).alias("tf"),
         F.sort_array(F.collect_list("pos")).alias("_positions"),
     )
-    terms_lit = spark.createDataFrame(
-        [(t,) for t in BM25_QUERY_TERMS], "token string"
+    terms_lit = local_frame(
+        spark, [(t,) for t in BM25_QUERY_TERMS], "token string"
     )
     df = grouped.join(F.broadcast(terms_lit), "token").groupBy("token").agg(
         F.count(F.lit(1)).alias("df")
@@ -273,8 +274,8 @@ def _payload_index(spark: SparkSession, sf_dir: str):
     blocks = postings.groupBy("term_bucket", "term", "block_id").agg(
         F.max("bm25").alias("block_max_bm25")
     )
-    qterms = spark.createDataFrame(
-        [(1, t) for t in BM25_QUERY_TERMS], "qnum int, term string"
+    qterms = local_frame(
+        spark, [(1, t) for t in BM25_QUERY_TERMS], "qnum int, term string"
     ).withColumn(
         "term_bucket", F.pmod(F.xxhash64("term"), F.lit(64)).cast("int")
     )

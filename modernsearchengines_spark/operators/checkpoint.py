@@ -30,6 +30,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources import fsio
 from . import indexer
 
@@ -185,8 +186,8 @@ def merge_segments(
 
     char_sum = enriched.agg(F.sum("aug_len")).collect()[0][0] or 0
     avg_doc_len = char_sum / n_total if n_total else 0.0
-    corpus_stats = spark.createDataFrame(
-        [(n_total, float(avg_doc_len))], "n_docs long, avg_doc_len double"
+    corpus_stats = local_frame(
+        spark, [(n_total, float(avg_doc_len))], "n_docs long, avg_doc_len double"
     )
 
     postings_with_len = enriched.select(
@@ -384,8 +385,10 @@ def build_index_pipelined(
             )
         n_total = stats_row.n
         avg_doc_len = (stats_row.chars or 0) / n_total if n_total else 0.0
-        corpus_stats = spark.createDataFrame(
-            [(n_total, float(avg_doc_len))], "n_docs long, avg_doc_len double"
+        corpus_stats = local_frame(
+            spark,
+            [(n_total, float(avg_doc_len))],
+            "n_docs long, avg_doc_len double",
         )
         corpus_stats.write.mode("overwrite").parquet(
             f"{out_dir}/corpus_stats"

@@ -47,6 +47,7 @@ from pyspark.sql.types import (
 
 from ..functions.simhash import simhash64
 from ..functions.tokenizer import tokenize, url_to_words
+from ..session import local_frame
 from .codec import varbyte_encode_batch
 
 K1 = 1.5
@@ -456,8 +457,8 @@ def build_index(
         )
     n_total, char_sum = stats_row.n, stats_row.chars or 0
     avg_doc_len = char_sum / n_total if n_total else 0.0
-    corpus_stats = spark.createDataFrame(
-        [(n_total, float(avg_doc_len))], "n_docs long, avg_doc_len double"
+    corpus_stats = local_frame(
+        spark, [(n_total, float(avg_doc_len))], "n_docs long, avg_doc_len double"
     )
 
     # Flatten to posting rows; doc_len rides along (no doc-stats join later).
@@ -757,15 +758,26 @@ def read_index(
     spark: SparkSession, out_dir: str, serve: bool = False
 ) -> dict[str, DataFrame]:
     """Open a written index.  With ``serve=True`` the postings relation is
-    returned CACHED AND MATERIALIZED with its scan splits sized to ~3
-    partitions per session core (instead of the batch default 128 MB,
-    which packs a multi-GB postings table into a handful of partitions and
-    caps every cached-scan query stage at that parallelism — measured:
-    the 400k-doc index cached as 12 partitions, idling 20 of 32 cores and
-    flattening query-batch scaling).  Split sizing happens at scan
-    EXECUTION time, so the cache is materialized inside the temporary
-    conf window; no shuffle is involved.  On a real cluster the same
-    holds per executor core via ``defaultParallelism``.
+    returned CACHED AND MATERIALIZED as
+    ``clamp(ceil(postings_bytes / split), defaultParallelism,
+    3·defaultParallelism)`` partitions, ``split`` being the bytes per
+    partition at 3 per core with an 8 MB floor (instead of the batch
+    default 128 MB splits, which pack a multi-GB postings table into a
+    handful of partitions and cap every cached-scan query stage at that
+    parallelism — measured: the 400k-doc index cached as 12 partitions,
+    idling 20 of 32 cores and flattening query-batch scaling).  Split
+    sizing happens at scan EXECUTION time, so the cache is materialized
+    inside the temporary conf window; no shuffle is involved.  On a real
+    cluster the same holds per executor core via ``defaultParallelism``.
+
+    The split size alone does not fix the partition count: Spark packs
+    every file as its length plus ``spark.sql.files.openCostInBytes``
+    (4 MB), so the 64 small ``term_bucket`` files of a small index fill
+    8 MB splits two at a time — a 1.2 MB postings table would cache as 32
+    partitions and every cached-scan stage would run 32 tasks.  The
+    ``coalesce`` to the clamped count (no shuffle) removes that; at scale
+    ``postings_bytes / split`` already reaches the upper bound, so large
+    indexes keep 3 partitions per core.
 
     Caveat (ADVICE r5): the conf window temporarily mutates the
     session-global ``spark.sql.files.maxPartitionBytes``; a query planned
@@ -777,17 +789,20 @@ def read_index(
     from pyspark.errors import AnalysisException
 
     if serve:
-        sc = spark.sparkContext
-        target = max(1, 3 * sc.defaultParallelism)
-        split = max(
-            _SERVE_SPLIT_FLOOR,
-            _dir_bytes(spark, f"{out_dir}/postings") // target,
-        )
+        cores = spark.sparkContext.defaultParallelism
+        target = max(1, 3 * cores)
+        size = _dir_bytes(spark, f"{out_dir}/postings")
+        split = max(_SERVE_SPLIT_FLOOR, size // target)
+        n_parts = min(target, max(cores, -(-size // split)))
         key = "spark.sql.files.maxPartitionBytes"
         old = spark.conf.get(key)
         spark.conf.set(key, str(split))
         try:
-            postings = spark.read.parquet(f"{out_dir}/postings").cache()
+            postings = (
+                spark.read.parquet(f"{out_dir}/postings")
+                .coalesce(n_parts)
+                .cache()
+            )
             postings.count()  # splits are planned here, under the temp conf
         finally:
             spark.conf.set(key, old)

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _qterm_side(terms: DataFrame):
     """Broadcast side of the retrieval join; carries (idf, avgdl) when the
@@ -138,15 +140,15 @@ def _theta_literal(scores_for_seeds: DataFrame, k: int) -> DataFrame:
     collecting the per-query minimum splits the computation into two jobs
     that each evaluate every subtree once.  Driver traffic: nq rows.
     """
-    spark = scores_for_seeds.sparkSession
     rows = (
         _topk_per_qnum(scores_for_seeds, k)
         .groupBy("qnum")
         .agg(F.min("score").alias("theta"))
         .collect()
     )
-    return spark.createDataFrame(
-        [(r.qnum, float(r.theta)) for r in rows] or [(None, None)],
+    return local_frame(
+        scores_for_seeds.sparkSession,
+        [(r.qnum, float(r.theta)) for r in rows],
         "qnum int, theta double",
     )
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -52,3 +52,31 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A small driver-built frame: ``rows`` are tuples in the column order of
+    the DDL schema ``ddl``.
+
+    The rows go to Spark as a ``pyarrow.Table``; below
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark plans it as a
+    JVM ``LocalRelation`` (``LocalTableScan``), so running it starts no job
+    and no Python worker.  ``spark.createDataFrame(<list>)`` instead
+    parallelizes a pickled PythonRDD, and every scan of it starts Python
+    worker tasks (≈0.25 s of worker CPU each on Python 3.11 with
+    ``pyspark.zip``, whatever the row count).  Zero rows keep the schema.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=field.type)
+            for i, field in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import fsio
 
 
@@ -149,8 +150,8 @@ def append_to_index(
         )
     n_total = row.n
     avg_doc_len = (row.chars or 0) / n_total if n_total else 0.0
-    spark.createDataFrame(
-        [(n_total, float(avg_doc_len))], "n_docs long, avg_doc_len double"
+    local_frame(
+        spark, [(n_total, float(avg_doc_len))], "n_docs long, avg_doc_len double"
     ).write.mode("overwrite").parquet(f"{index_dir}/corpus_stats")
 
     # -- 3b. terms: df over the term column of the WRITTEN postings -------

@@ -51,6 +51,10 @@ def test_serve_true_is_cached_and_identical(spark, docs_df, tmp_path_factory):
         served["postings"].rdd.getNumPartitions()
         >= plain["postings"].rdd.getNumPartitions()
     )
+    # ...and caches one to three partitions per core, however many small
+    # bucket files the postings are split into
+    cores = spark.sparkContext.defaultParallelism
+    assert cores <= served["postings"].rdd.getNumPartitions() <= 3 * cores
     served["postings"].unpersist()
 
 

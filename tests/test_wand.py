@@ -175,3 +175,33 @@ def test_payload_pruning_stats(spark_index, terms):
     # cascade bound admits a subset of the block-max candidates.
     assert casc["scored_docs"] <= bmax["scored_docs"]
     assert casc["matched_docs"] == bmax["matched_docs"]
+
+
+def test_driver_built_frames_are_local_relations(spark, spark_index):
+    """The query-terms frame and θ are JVM LocalRelations: running them
+    starts no job and no Python worker task, which a pickled-RDD frame
+    (``Scan ExistingRDD``) does on every scan.  A query whose every term is
+    df-pruned yields zero rows with the full schema."""
+    from modernsearchengines_spark.operators.expansion import CompiledQuery
+    from modernsearchengines_spark.plans.explain import formatted_plan
+
+    def assert_local(df):
+        plan = formatted_plan(df)
+        assert "LocalTableScan" in plan and "Scan ExistingRDD" not in plan, plan
+
+    qterms = query.query_terms_df(
+        spark, [compile_query(q, t) for q, t in QUERIES], index=spark_index
+    )
+    assert_local(qterms)
+    scores = wand.bm25_topk_exhaustive(spark_index["postings"], qterms, 10)
+    theta = wand._theta_literal(scores, 10)
+    assert_local(theta)
+    assert theta.count() == len(QUERIES)
+    assert_local(wand._theta_literal(scores.limit(0), 10))
+
+    unknown = CompiledQuery(1, "zzqxv", ("zzqxv",), ("zzqxv",))
+    empty = query.query_terms_df(spark, [unknown], index=spark_index)
+    assert_local(empty)
+    assert empty.count() == 0
+    assert empty.columns == qterms.columns
+    assert empty.schema == qterms.schema
