@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from decimal import Decimal
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -912,33 +913,37 @@ def q_tpch_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
     )
     # Exact integer-cents arithmetic (guide §2.3 narrower types): the 2-dp
-    # decimals become longs scaled by 100, so disc_price/charge are exact
-    # long products summed on the primitive fast path instead of
-    # widened-decimal (37,4)/(38,6) products summed through BigDecimal.
-    # Values are bit-identical to the r5 decimal formulation (verified at
-    # sf 0.001/0.01/0.1/1.0): every intermediate is an exact integer and
-    # long/10^k division is correctly rounded like the decimal→double
-    # cast.  Overflow headroom: charge-cents·10⁴ ≤ ~1.2e11 per row, so a
-    # group's long sum is exact up to ~7.6e7 rows/group (≈ TPC-H sf 75);
-    # beyond that, switch the two product sums to decimal(38,0) over the
-    # same long products.
+    # decimals become longs scaled by 100, so each row's disc_price/charge
+    # is an exact long product (charge-cents·10⁴ ≤ ~1.2e11 per row) instead
+    # of a widened-decimal (37,4)/(38,6) product.  The two product sums run
+    # as decimal(38,0): as longs they overflow past ~7.6e7 rows/group
+    # (≈ TPC-H sf 75).  Both are rounded to cents as exact decimals BEFORE
+    # the double cast, as oracle_sql() does: rounding the double instead
+    # turns a half-cent sum whose nearest double lies below the tie
+    # (335918163.655 → 335918163.65499997…) into .65 or .66 depending on
+    # the rounding routine.
     c100 = lambda c: (F.col(c).cast("decimal(18,2)") * 100).cast("long")
     qty_c, price_c = c100("l_quantity"), c100("l_extendedprice")
     disc_c, tax_c = c100("l_discount"), c100("l_tax")
+    disc_price = price_c * (100 - disc_c)
     agg = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.sum(qty_c).alias("_sq_c"),
         F.sum(price_c).alias("_sbp_c"),
-        F.sum(price_c * (100 - disc_c)).alias("_sdp_c"),
-        F.sum(price_c * (100 - disc_c) * (100 + tax_c)).alias("_sc_c"),
+        F.sum(disc_price.cast("decimal(38,0)")).alias("_sdp_c"),
+        F.sum((disc_price * (100 + tax_c)).cast("decimal(38,0)")).alias("_sc_c"),
         F.count(F.lit(1)).alias("count_order"),
     )
+    # unscaled decimal(38,0) sum × 10^-k → exact cents → double
+    cents = lambda c, k: F.round(
+        F.col(c) * F.lit(Decimal(1).scaleb(-k)), 2
+    ).cast("double")
     return agg.select(
         "l_returnflag",
         "l_linestatus",
         F.round(F.col("_sq_c") / 100.0, 2).alias("sum_qty"),
         F.round(F.col("_sbp_c") / 100.0, 2).alias("sum_base_price"),
-        F.round(F.col("_sdp_c") / 10000.0, 2).alias("sum_disc_price"),
-        F.round(F.col("_sc_c") / 1000000.0, 2).alias("sum_charge"),
+        cents("_sdp_c", 4).alias("sum_disc_price"),
+        cents("_sc_c", 6).alias("sum_charge"),
         F.round((F.col("_sq_c") / 100.0) / F.col("count_order"), 6).alias("avg_qty"),
         F.round((F.col("_sbp_c") / 100.0) / F.col("count_order"), 6).alias("avg_price"),
         "count_order",
@@ -1939,11 +1944,11 @@ FROM starts GROUP BY w_start, event_type
 SELECT l_returnflag, l_linestatus,
        ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_qty,
        ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_base_price,
-       ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                       * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE), 2) AS sum_disc_price,
-       ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
+       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
+                       * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))), 2) AS DOUBLE) AS sum_disc_price,
+       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
                        * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
-                       * (CAST(1 AS DECIMAL(18,2)) + CAST(l_tax AS DECIMAL(18,2)))) AS DOUBLE), 2) AS sum_charge,
+                       * (CAST(1 AS DECIMAL(18,2)) + CAST(l_tax AS DECIMAL(18,2)))), 2) AS DOUBLE) AS sum_charge,
        ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 6) AS avg_qty,
        ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 6) AS avg_price,
        COUNT(*) AS count_order

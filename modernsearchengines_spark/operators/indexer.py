@@ -64,9 +64,8 @@ def bm25_expr(idf, tf, dl, avgdl):
     materialized bm25 freezes idf/avgdl (corpus-global stats) into every
     posting row, so ANY corpus append would invalidate and rewrite the
     whole index.  Storing (tf, dl) makes appends touch only the new
-    segment's postings plus the small terms/corpus_stats tables, and lets
-    the bucket-layout shuffle start before the global stats exist (the
-    build pipeline overlap in build_index_pipelined).  Consumers
+    segment's postings plus the small terms/corpus_stats tables
+    (corpus_io.append_to_index).  Consumers
     materialize bm25 with this expression right after their (broadcast)
     query-terms join — per-query cost is a fused multiply over already-
     matched rows inside whole-stage codegen.
@@ -347,31 +346,57 @@ def tokenize_docs(docs_with_ids: DataFrame) -> DataFrame:
     )
 
 
-def term_doc_frequency(enriched: DataFrame, df_salt: int = DF_SALT) -> DataFrame:
-    """(term, df) from the enriched segment via a NARROW nested scan.
+def term_doc_frequency(term_rows: DataFrame, df_salt: int = DF_SALT) -> DataFrame:
+    """(term, df) from ``(doc_id, term)`` rows, one row per (term, doc) pair.
 
-    Document frequency needs only ``postings.term`` — extracting the term
-    subfield BEFORE the explode lets Parquet nested-schema pruning skip the
-    fat positions_vb blobs entirely, so this pass streams a few MB of
-    dictionary-encoded strings instead of the whole segment.  Keeping it a
-    separate scan (instead of forking the one fat flatten) matters under
-    AQE: forked branches of a shared exchange materialize as two full
-    shuffles of the wide posting rows (measured: two ~4-5s × 32-task stages
-    at 400k docs), while this narrow re-scan costs less than either.
+    Callers pass the narrowest source they have: the build explodes the
+    enriched segment's ``postings.term`` subfield (Parquet nested-schema
+    pruning then skips the fat positions_vb blobs, so this pass streams a
+    few MB of dictionary-encoded strings instead of the whole segment);
+    an append re-counts the written postings' ``term, doc_id`` columns.
+    Keeping it a separate scan (instead of forking the one fat flatten)
+    matters under AQE: forked branches of a shared exchange materialize as
+    two full shuffles of the wide posting rows (measured: two ~4-5s ×
+    32-task stages at 400k docs), while this narrow re-scan costs less
+    than either.
 
     Two-level salted aggregation for head-term skew (R5: "tuebingen" is in
     nearly every doc by design): pre-aggregate per (term, salt-of-doc_id),
     then merge the ≤ df_salt partials per term.  Exact counts.
     """
-    terms = enriched.select(
-        "doc_id", F.explode(F.col("postings.term")).alias("term")
-    )
     salted = (
-        terms.withColumn("_salt", F.pmod(F.xxhash64("doc_id"), F.lit(df_salt)))
+        term_rows.withColumn(
+            "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(df_salt))
+        )
         .groupBy("term", "_salt")
         .agg(F.count(F.lit(1)).alias("_partial_df"))
     )
     return salted.groupBy("term").agg(F.sum("_partial_df").alias("df"))
+
+
+def finalize_terms(
+    term_df: DataFrame,
+    n_total: int,
+    df_prune: int = DF_PRUNE,
+    term_buckets: int = DEFAULT_TERM_BUCKETS,
+) -> DataFrame:
+    """(term, df) → the persisted ``terms`` table: df>``df_prune`` prune
+    (Q6), IDF (reference indexing.py:162-171) over ``n_total`` docs, and
+    the ``term_bucket`` partition column shared with postings."""
+    return (
+        term_df.filter(F.col("df") > df_prune)
+        .withColumn(
+            "idf",
+            F.log(
+                (F.lit(n_total) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+                + 1.0
+            ),
+        )
+        .withColumn(
+            "term_bucket",
+            F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int"),
+        )
+    )
 
 
 def build_index(
@@ -476,9 +501,12 @@ def build_index(
         F.col("p.positions_vb").alias("positions_vb"),
     )
 
+    term_df = term_doc_frequency(
+        enriched.select("doc_id", F.explode("postings.term").alias("term"))
+    )
     postings, blocks, terms = score_and_layout(
-        postings_raw, n_total, avg_doc_len, term_buckets, n_blocks, df_prune,
-        term_df=term_doc_frequency(enriched),
+        postings_raw, term_df, n_total, avg_doc_len, term_buckets, n_blocks,
+        df_prune,
     )
     return {
         "postings": postings,
@@ -492,13 +520,12 @@ def build_index(
 
 def score_and_layout(
     postings_raw: DataFrame,
+    term_df: DataFrame,
     n_total: int,
     avg_doc_len: float,
     term_buckets: int = DEFAULT_TERM_BUCKETS,
     n_blocks: int = DEFAULT_N_BLOCKS,
     df_prune: int = DF_PRUNE,
-    term_df: DataFrame | None = None,
-    broadcast_terms: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """df → IDF → df>5 prune → deferred-scoring block layout (pure JVM —
     positions arrive already varbyte-encoded from doc_postings_udf).
@@ -513,20 +540,17 @@ def score_and_layout(
     can re-join from a table 100× smaller (measured at 400k docs: 1.26 GB
     layout exchange with them).
 
-    ``postings_raw`` must carry (term, doc_id, tf, positions_vb, doc_len).
-    Callers holding the enriched segment table should pass
-    ``term_df=term_doc_frequency(enriched)`` so the df pass reads only the
-    term subfield; the fallback here derives df from ``postings_raw``
-    itself, which re-evaluates that (possibly fat) subtree a second time.
+    ``postings_raw`` must carry (term, doc_id, tf, positions_vb, doc_len);
+    ``term_df`` is the (term, df) frame of :func:`term_doc_frequency`,
+    computed from a narrow term-only scan so the df pass never re-reads
+    the fat posting rows.
 
-    ``broadcast_terms``: hint the postings⨝terms join to broadcast.  The
-    static planner cannot estimate the aggregated term table's size and
-    plans a sort-merge join, which materializes a full shuffle of the fat
-    posting rows before AQE's runtime broadcast conversion can kick in
-    (measured: an 890 MB dead exchange at 400k docs).  Vocabulary grows
-    sublinearly (Heaps' law): ~400k terms here, and an estimated few GB at
-    10^12 docs — set False past ~10^10 docs and let AQE + skew-join handle
-    the merge join instead.
+    Both terms joins are hinted to broadcast.  The static planner cannot
+    estimate the aggregated term table's size and plans a sort-merge join,
+    which materializes a full shuffle of the fat posting rows before AQE's
+    runtime broadcast conversion can kick in (measured: an 890 MB dead
+    exchange at 400k docs).  Vocabulary grows sublinearly (Heaps' law):
+    ~400k terms here, and an estimated few GB at 10^12 docs.
 
     Block layout: ``block_id = pmod(doc_id, n_blocks)`` — a BOUNDED hash
     partition of each term's postings (≤ n_blocks per-block maxima per term)
@@ -541,41 +565,16 @@ def score_and_layout(
     blocks table as large as postings, zero pruning — observed as WAND
     slower than exhaustive at 400k docs).
     """
-    if term_df is None:
-        # Fallback: derive df from the posting rows themselves (same
-        # two-level salted agg as term_doc_frequency, R5 head-term skew).
-        salted = (
-            postings_raw.withColumn(
-                "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(DF_SALT))
-            )
-            .groupBy("term", "_salt")
-            .agg(F.count(F.lit(1)).alias("_partial_df"))
-        )
-        term_df = salted.groupBy("term").agg(
-            F.sum("_partial_df").alias("df")
-        )
-
-    pruned_terms = term_df.filter(F.col("df") > df_prune).withColumn(
-        "idf",
-        F.log(
-            (F.lit(n_total) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-        ),
-    )
-    prune_side = pruned_terms.select("term")
-    if broadcast_terms:
-        prune_side = F.broadcast(prune_side)
+    terms = finalize_terms(term_df, n_total, df_prune, term_buckets)
 
     # DEFERRED SCORING (see bm25_expr): the layout stores (tf, dl) and NO
     # bm25 column — the df>5 prune is a LEFT SEMI join (no term attributes
     # ride on the fat posting rows at all), so the bucket exchange carries
-    # 4 fewer bytes/row than the round-2 bm25 layout and, crucially, the
-    # whole layout branch has NO dependence on corpus-global stats
-    # (n_total/avgdl feed only the small terms/blocks tables).  That
-    # independence is what lets build_index_pipelined overlap segment
-    # tokenize (Python-CPU) with segment layout (shuffle/parquet,
-    # DRAM-bound).
+    # 4 fewer bytes/row than the round-2 bm25 layout, and the whole layout
+    # branch has NO dependence on corpus-global stats (n_total/avgdl feed
+    # only the small terms/blocks tables).
     layout = (
-        postings_raw.join(prune_side, "term", "left_semi")
+        postings_raw.join(F.broadcast(terms.select("term")), "term", "left_semi")
         .withColumn(
             "block_id",
             F.pmod(F.col("doc_id"), F.lit(n_blocks)).cast("int"),
@@ -607,23 +606,16 @@ def score_and_layout(
     g = bm25_expr(
         F.lit(1.0), F.col("tf"), F.col("dl"), F.lit(float(avg_doc_len))
     )
-    idf_side = pruned_terms.select("term", "idf")
-    if broadcast_terms:
-        idf_side = F.broadcast(idf_side)
     blocks = (
         postings.groupBy("term_bucket", "term", "block_id")
         .agg(F.max(g).alias("_max_g"))
-        .join(idf_side, "term")
+        .join(F.broadcast(terms.select("term", "idf")), "term")
         .select(
             "term_bucket",
             "term",
             "block_id",
             (F.col("idf") * F.col("_max_g")).alias("block_max_bm25"),
         )
-    )
-    terms = pruned_terms.withColumn(
-        "term_bucket",
-        F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int"),
     )
     return postings, blocks, terms
 

@@ -78,6 +78,10 @@ def append_to_index(
     are never rewritten (the whole point of the deferred-scoring (tf, dl)
     layout, indexer.bm25_expr).  Returns the number of docs appended.
 
+    When ``index_dir`` holds no index yet (no ``doc_stats``), the batch
+    becomes segment zero of a new one: this is how an appendable index is
+    created.
+
     Steps:
       1. clean + id the batch, drop urls already in doc_stats (INSERT OR
          IGNORE semantics, same key as :func:`append_new_docs`);
@@ -89,13 +93,14 @@ def append_to_index(
          new idf), and blocks (indexer.write_blocks) — all small relative
          to postings.
 
-    Requires an index whose postings store (tf, dl) WITHOUT a build-time
-    df prune (build_index_pipelined / layout_segment); a classic pruned
-    build would need its dropped df≤5 rows back when a term's df crosses
-    the threshold.  Near-duplicates of ALREADY-INDEXED docs are not
-    detected here (the batch is deduped internally; url is the append
-    key) — cross-batch simhash dedup is a periodic compaction concern,
-    matching the reference's retroactive cleanup (topic.py:156-174).
+    Raises ``ValueError`` before writing anything when the existing index
+    is df-pruned (a classic ``indexer.build_index`` + ``write_index``
+    build): its dropped df≤5 rows could never come back once a term's df
+    crosses the threshold, so rankings would silently go wrong.  Near-
+    duplicates of ALREADY-INDEXED docs are not detected here (the batch is
+    deduped internally; url is the append key) — cross-batch simhash dedup
+    is a periodic compaction concern, matching the reference's retroactive
+    cleanup (topic.py:156-174).
     """
     import uuid
 
@@ -115,12 +120,11 @@ def append_to_index(
     n_blocks = indexer.DEFAULT_N_BLOCKS if n_blocks is None else n_blocks
 
     doc_stats_path = f"{index_dir}/doc_stats"
-    existing = spark.read.parquet(doc_stats_path)
-
-    clean = indexer.clean_docs(new_docs)
-    docs = indexer.assign_doc_ids(clean).join(
-        existing.select("url"), "url", "left_anti"
-    )
+    docs = indexer.assign_doc_ids(indexer.clean_docs(new_docs))
+    if fsio.exists(spark, doc_stats_path):
+        _require_unpruned(spark, index_dir)
+        existing = spark.read.parquet(doc_stats_path)
+        docs = docs.join(existing.select("url"), "url", "left_anti")
     n_new = docs.count()
     if n_new == 0:
         return 0
@@ -156,32 +160,13 @@ def append_to_index(
 
     # -- 3b. terms: df over the term column of the WRITTEN postings -------
     # (narrow columnar scan; every posting row is one (term, doc) pair, so
-    # count == document frequency).  Same two-level salted agg as the
-    # build's term_doc_frequency (R5 head-term skew).
+    # count == document frequency)
     written = spark.read.parquet(f"{index_dir}/postings")
-    salted = (
-        written.select("term", "doc_id")
-        .withColumn(
-            "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(indexer.DF_SALT))
-        )
-        .groupBy("term", "_salt")
-        .agg(F.count(F.lit(1)).alias("_partial_df"))
-    )
-    terms = (
-        salted.groupBy("term")
-        .agg(F.sum("_partial_df").alias("df"))
-        .filter(F.col("df") > df_prune)
-        .withColumn(
-            "idf",
-            F.log(
-                (F.lit(n_total) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                + 1.0
-            ),
-        )
-        .withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int"),
-        )
+    terms = indexer.finalize_terms(
+        indexer.term_doc_frequency(written.select("doc_id", "term")),
+        n_total,
+        df_prune,
+        term_buckets,
     )
     terms.repartition("term_bucket").write.mode("overwrite").partitionBy(
         "term_bucket"
@@ -197,3 +182,23 @@ def append_to_index(
         index_dir,
     )
     return n_new
+
+
+def _require_unpruned(spark: SparkSession, index_dir: str) -> None:
+    """Refuse to append to a df-pruned index.  Every indexed token is one
+    unit of some posting's tf, and length-capped docs have doc_len 0 and
+    no postings, so an index keeps every posting exactly when
+    Σ postings.tf == Σ doc_stats.doc_len."""
+    def _sum(table: str, col: str) -> int:
+        path = f"{index_dir}/{table}"
+        return spark.read.parquet(path).agg(F.sum(col)).collect()[0][0] or 0
+
+    tf_sum, len_sum = _sum("postings", "tf"), _sum("doc_stats", "doc_len")
+    if tf_sum != len_sum:
+        raise ValueError(
+            f"cannot append to {index_dir}: its postings hold {tf_sum} of "
+            f"{len_sum} indexed tokens, so it was built with the df prune "
+            "(indexer.build_index + write_index) and the dropped postings "
+            "would never return once a term's df crosses the threshold; "
+            "create the index with append_to_index into an empty directory"
+        )

@@ -48,7 +48,7 @@ def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
     import pytest
     from pyspark.sql import functions as F
 
-    from modernsearchengines_spark.operators import checkpoint, indexer, query
+    from modernsearchengines_spark.operators import indexer, query
     from modernsearchengines_spark.sources.corpus_io import append_to_index
     from modernsearchengines_spark.sources.docs import REFERENCE_QUERIES
 
@@ -61,7 +61,7 @@ def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
 
     out_inc = str(tmp_path / "idx_inc")
     out_full = str(tmp_path / "idx_full")
-    checkpoint.build_index_pipelined(spark, first, out_inc, n_segments=2)
+    append_to_index(spark, out_inc, first)
 
     before = {
         p: os.path.getmtime(p)
@@ -80,7 +80,7 @@ def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
     assert all(after[p] == before[p] for p in before)
     assert len(after) > len(before)
 
-    checkpoint.build_index_pipelined(spark, clean_full, out_full, n_segments=2)
+    append_to_index(spark, out_full, clean_full)
     idx_inc = indexer.read_index(spark, out_inc)
     idx_full = indexer.read_index(spark, out_full)
 
