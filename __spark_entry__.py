@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from modernsearchengines_spark.functions import text_analysis as ta
-from modernsearchengines_spark.operators import dedup, similarity
+from modernsearchengines_spark.operators import dedup, indexer, similarity
 from modernsearchengines_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
@@ -34,7 +34,6 @@ from modernsearchengines_spark.session import local_frame
 # ---------------------------------------------------------------------------
 
 BM25_QUERY_TERMS = ["spark", "join", "merge", "window"]
-K1, B = 1.5, 0.75
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -91,9 +90,7 @@ def _doc_tokens(docs: DataFrame) -> DataFrame:
     """(doc_id, token, pos) whitespace token stream — JVM split/posexplode."""
     return docs.select(
         "doc_id",
-        F.posexplode(
-            F.filter(F.split("text", " "), lambda t: t != "")
-        ).alias("pos", "token"),
+        F.posexplode(ta.tokens(F.col("text"))).alias("pos", "token"),
     )
 
 
@@ -142,12 +139,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _spread(
         spark, raw, f"{sf_dir}/documents.parquet", "doc_id"
     )
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
-
-    def tf_of(term: str):
-        # single-parameter lambda: a 2-arg lambda would be read by Spark
-        # as the (element, index) form
-        return F.size(F.filter(toks, lambda x: x == F.lit(term)))
+    toks = ta.tokens(F.col("text"))
 
     # Per-doc term frequencies + doc length in one projection; codegen
     # subexpression elimination computes the split once per row.  The
@@ -159,7 +151,10 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     wt = docs.select(
         "doc_id",
         F.size(toks).alias("dl"),
-        *[tf_of(t).alias(f"_tf{i}") for i, t in enumerate(BM25_QUERY_TERMS)],
+        *[
+            ta.term_count(toks, t).alias(f"_tf{i}")
+            for i, t in enumerate(BM25_QUERY_TERMS)
+        ],
     ).localCheckpoint()
     # Corpus stats pass: avgdl over ALL docs (r5 doc_len semantics), df
     # per term over docs with a non-null id (r5 tf-subtree semantics).
@@ -174,17 +169,9 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
 
-    def idf(i: int):
-        return F.log(
-            (F.lit(n_docs) - F.col(f"_df{i}") + 0.5)
-            / (F.col(f"_df{i}") + 0.5)
-            + 1.0
-        )
-
     def bm25(i: int):
-        tf = F.col(f"_tf{i}")
-        return idf(i) * (tf * (K1 + 1)) / (
-            tf + K1 * (1 - B + B * (F.col("dl") / F.col("avgdl")))
+        return indexer.bm25_expr(
+            indexer.idf_expr(n_docs, f"_df{i}"), f"_tf{i}", "dl", "avgdl"
         )
 
     matched = [F.col(f"_tf{i}") > 0 for i in range(len(BM25_QUERY_TERMS))]
@@ -228,57 +215,63 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _payload_index(spark: SparkSession, sf_dir: str):
-    """postings/blocks/query-terms layout over `documents` shared by the
-    payload-retrieval contract entries (q_payload_topk, q_plm_topk)."""
+    """postings/blocks/query-terms over `documents` for the pruned top-k
+    entries (q_payload_topk, q_plm_topk, q_wand_pruned_topk): the engine's
+    own unpruned layout (indexer.score_and_layout) of the BM25_QUERY_TERMS
+    postings, and the serve path's query-terms frame (query.query_terms_df)
+    carrying their idf and the corpus avgdl."""
+    from modernsearchengines_spark.operators import query
     from modernsearchengines_spark.operators.codec import varbyte_encode_udf
+    from modernsearchengines_spark.operators.expansion import CompiledQuery
 
     raw = _t(spark, sf_dir, "documents")
-    n_docs = raw.count()
+    text = F.col("text")
+    stats = raw.agg(
+        F.count(F.lit(1)).alias("n"), F.sum(ta.token_count(text)).alias("dl")
+    ).collect()[0]
+    n_docs, avgdl = stats.n, stats.dl / stats.n
     docs = _spread(spark, raw, f"{sf_dir}/documents.parquet", "doc_id")
-    tokens = _doc_tokens(docs)
-    doc_len = tokens.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    avgdl = doc_len.agg((F.sum("dl") / F.lit(n_docs)).alias("avgdl"))
-    grouped = tokens.groupBy("doc_id", "token").agg(
-        F.count(F.lit(1)).alias("tf"),
-        F.sort_array(F.collect_list("pos")).alias("_positions"),
-    )
-    terms_lit = local_frame(
-        spark, [(t,) for t in BM25_QUERY_TERMS], "token string"
-    )
-    df = grouped.join(F.broadcast(terms_lit), "token").groupBy("token").agg(
-        F.count(F.lit(1)).alias("df")
-    )
-    postings = (
-        grouped.join(F.broadcast(terms_lit), "token")
-        .join(F.broadcast(df), "token")
-        .join(doc_len, "doc_id")
-        .crossJoin(F.broadcast(avgdl))
-        .withColumn(
-            "idf",
-            F.log((F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
+    # The term filter sits below the (doc_id, term) aggregation, so only
+    # the query terms' positions are collected.
+    grouped = (
+        docs.select(
+            "doc_id",
+            ta.token_count(text).alias("doc_len"),
+            F.posexplode(ta.tokens(text)).alias("pos", "term"),
         )
-        .withColumn(
-            "bm25",
-            F.col("idf") * (F.col("tf") * (K1 + 1))
-            / (F.col("tf") + K1 * (1 - B + B * (F.col("dl") / F.col("avgdl")))),
-        )
-        .withColumn("positions_vb", varbyte_encode_udf("_positions"))
-        .withColumn("block_id", F.pmod("doc_id", F.lit(256)).cast("int"))
-        .withColumn(
-            "term_bucket", F.pmod(F.xxhash64("token"), F.lit(64)).cast("int")
-        )
-        .select(
-            "term_bucket", F.col("token").alias("term"), "doc_id", "tf",
-            "bm25", "positions_vb", "block_id",
+        .filter(F.col("term").isin(BM25_QUERY_TERMS))
+        .groupBy("doc_id", "doc_len", "term")
+        .agg(
+            F.count(F.lit(1)).alias("tf"),
+            F.sort_array(F.collect_list("pos")).alias("_positions"),
         )
     )
-    blocks = postings.groupBy("term_bucket", "term", "block_id").agg(
-        F.max("bm25").alias("block_max_bm25")
+    # One (term, df) row per query term, collected so the terms/blocks
+    # joins read a LocalRelation instead of re-tokenizing the corpus.
+    term_df = local_frame(
+        spark,
+        indexer.term_doc_frequency(grouped.select("doc_id", "term")).collect(),
+        "term string, df long",
     )
-    qterms = local_frame(
-        spark, [(1, t) for t in BM25_QUERY_TERMS], "qnum int, term string"
-    ).withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(64)).cast("int")
+    postings, blocks, terms = indexer.score_and_layout(
+        grouped.withColumn("positions_vb", varbyte_encode_udf("_positions")),
+        term_df,
+        n_docs,
+        avgdl,
+        df_prune=0,
+    )
+    corpus_stats = local_frame(
+        spark, [(n_docs, avgdl)], "n_docs long, avg_doc_len double"
+    )
+    qterms = query.query_terms_df(
+        spark,
+        [
+            CompiledQuery(
+                1, " ".join(BM25_QUERY_TERMS), BM25_QUERY_TERMS,
+                BM25_QUERY_TERMS,
+            )
+        ],
+        index={"terms": terms, "corpus_stats": corpus_stats},
     )
     return postings, blocks, qterms
 
@@ -350,37 +343,31 @@ def q_doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty array... which produced none — hence the explicit guard below
     keeping ONLY docs with ≥1 token, the r5 row set."""
     docs = _ts(spark, sf_dir, "documents")
-    dl = F.size(F.filter(F.split("text", " "), lambda t: t != ""))
     return (
-        docs.select("doc_id", dl.alias("doc_len"))
+        docs.select("doc_id", ta.token_count(F.col("text")).alias("doc_len"))
         .filter(F.col("doc_len") > 0)
+    )
+
+
+def _doc_terms(docs: DataFrame) -> DataFrame:
+    """(doc_id, term) rows, one per distinct token of each doc — the
+    in-array dedup yields the set a global .distinct() would, with no
+    aggregation pass."""
+    return docs.select(
+        "doc_id",
+        F.explode(F.array_distinct(ta.tokens(F.col("text")))).alias("term"),
     )
 
 
 def q_term_df_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O-33 + O-19: document frequency with the df>5 persistence prune (Q6),
-    via the two-level salted aggregation used by the index build (R5).
-    r6: the per-doc token dedup happens in-array (array_distinct) during
-    the scan stage instead of a global 1M-row .distinct() aggregation —
-    identical (doc_id, token) set, one fewer aggregation pass; the salted
-    two-level df aggregation itself is unchanged."""
+    via the index build's two-level salted aggregation (R5,
+    indexer.term_doc_frequency)."""
     docs = _ts(spark, sf_dir, "documents").filter(F.col("lang") == "en")
-    tokens = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split("text", " "), lambda t: t != "")
-            )
-        ).alias("token"),
-    )
-    salted = tokens.withColumn(
-        "salt", F.pmod(F.col("doc_id"), F.lit(8))
-    ).groupBy("token", "salt").agg(F.count(F.lit(1)).alias("c"))
     return (
-        salted.groupBy("token")
-        .agg(F.sum("c").alias("df"))
-        .filter(F.col("df") > 5)
-        .select("token", "df")
+        indexer.term_doc_frequency(_doc_terms(docs))
+        .filter(F.col("df") > indexer.DF_PRUNE)
+        .select(F.col("term").alias("token"), "df")
     )
 
 
@@ -391,12 +378,11 @@ def q_postings_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan stage, so the former explode → broadcast join → groupBy
     shuffle disappears entirely (identical rows)."""
     docs = _ts(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = ta.tokens(F.col("text"))
 
     def tf_struct(term: str):
         return F.struct(
-            F.lit(term).alias("token"),
-            F.size(F.filter(toks, lambda x: x == F.lit(term))).alias("tf"),
+            F.lit(term).alias("token"), ta.term_count(toks, term).alias("tf")
         )
 
     entries = F.filter(
@@ -410,34 +396,16 @@ def q_postings_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O-35: BM25+ IDF per term over the full corpus (N counts all docs)."""
+    """O-35: BM25+ IDF per term over the full corpus (N counts all docs),
+    pruned and scored by the index build's indexer.finalize_terms."""
     raw = _t(spark, sf_dir, "documents")
     n_docs = raw.count()
     docs = _spread(spark, raw, f"{sf_dir}/documents.parquet", "doc_id")
-    # in-array per-doc dedup (same set as the former global .distinct())
-    tokens = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split("text", " "), lambda t: t != "")
-            )
-        ).alias("token"),
+    terms = indexer.finalize_terms(
+        indexer.term_doc_frequency(_doc_terms(docs)), n_docs, indexer.DF_PRUNE
     )
-    return (
-        tokens.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > 5)
-        .withColumn(
-            "idf",
-            F.round(
-                F.log(
-                    (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                    + 1.0
-                ),
-                6,
-            ),
-        )
-        .select("token", "df", "idf")
+    return terms.select(
+        F.col("term").alias("token"), "df", F.round("idf", 6).alias("idf")
     )
 
 
@@ -827,6 +795,19 @@ def q_proximity_2term(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _position_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, lists): per doc, the sorted position list of each of
+    spark/join/merge it contains — the min-span UDF's input."""
+    toks = _doc_tokens(_ts(spark, sf_dir, "documents"))
+    return (
+        toks.filter(F.col("token").isin("spark", "join", "merge"))
+        .groupBy("doc_id", "token")
+        .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
+        .groupBy("doc_id")
+        .agg(F.collect_list("positions").alias("lists"))
+    )
+
+
 def q_minspan_proximity_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O-53 general k-list min-span via the engine's heap-scan pandas UDF.
     Hash-checked: for this entry's fixed 3-term list the heap scan equals
@@ -835,16 +816,7 @@ def q_minspan_proximity_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality), so DuckDB verifies the UDF over every matched-set shape."""
     from modernsearchengines_spark.operators.proximity import min_span_score_udf
 
-    docs = _ts(spark, sf_dir, "documents")
-    toks = _doc_tokens(docs)
-    lists = (
-        toks.filter(F.col("token").isin("spark", "join", "merge"))
-        .groupBy("doc_id", "token")
-        .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-        .groupBy("doc_id")
-        .agg(F.collect_list("positions").alias("lists"))
-    )
-    return lists.select(
+    return _position_lists(spark, sf_dir).select(
         "doc_id", F.round(min_span_score_udf("lists"), 6).alias("prox")
     )
 
@@ -858,16 +830,7 @@ def q_minspan_proximity_3term(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree bit-for-bit under the same 1/(span/3) operand order)."""
     from modernsearchengines_spark.operators.proximity import min_span_score_udf
 
-    docs = _ts(spark, sf_dir, "documents")
-    toks = _doc_tokens(docs)
-    lists = (
-        toks.filter(F.col("token").isin("spark", "join", "merge"))
-        .groupBy("doc_id", "token")
-        .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-        .groupBy("doc_id")
-        .agg(F.collect_list("positions").alias("lists"))
-        .filter(F.size("lists") == 3)
-    )
+    lists = _position_lists(spark, sf_dir).filter(F.size("lists") == 3)
     return lists.select(
         "doc_id", F.round(min_span_score_udf("lists"), 6).alias("prox")
     )
@@ -876,7 +839,7 @@ def q_minspan_proximity_3term(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_token_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O-55/O-56 set union/difference over token arrays (JVM array fns)."""
     docs = _ts(spark, sf_dir, "documents")
-    toks = F.array_distinct(F.filter(F.split("text", " "), lambda t: t != ""))
+    toks = F.array_distinct(ta.tokens(F.col("text")))
     extra = F.array(F.lit("spark"), F.lit("flink"), F.lit("trino"))
     stop = F.array(F.lit("the"), F.lit("a"))
     return docs.select(

@@ -341,7 +341,7 @@ def measure_strategy_bytes(spark, index_dir: str) -> dict:
 
     Evidences the bm25_topk_auto cost model: the pruned path's phase-A
     upper-bound pass (term, doc_id, block_id) is a small fraction of the
-    payload scan (term, doc_id, bm25, positions_vb) because the position
+    payload scan (term, doc_id, tf, dl, positions_vb) because the position
     blobs dominate on-disk bytes.
     """
     import glob as _glob
@@ -378,9 +378,7 @@ def measure_strategy_bytes(spark, index_dir: str) -> dict:
     blocks_mb = 0.0
     for path in _glob.glob(f"{index_dir}/blocks/*.parquet"):
         blocks_mb += os.path.getsize(path) / 1e6
-    # Scoring columns: the legacy layout materializes bm25; the
-    # deferred-scoring layout reads (tf, dl) instead (indexer.bm25_expr).
-    score = ["bm25"] if "bm25" in col_bytes else ["tf", "dl"]
+    score = ["tf", "dl"]  # bm25 is derived from them (indexer.bm25_expr)
     return {
         "available": True,
         "n_pruned_bucket_files": n_files,
@@ -1453,7 +1451,7 @@ def render_baseline_md(result: dict, n_bench_docs: int, sf_dir: str) -> str:
             "| pass | MB fetched |",
             "|---|---|",
             f"| pruned path phase A (term/doc_id/block_id + blocks table) | {strategy_bytes['ub_pass_mb']} |",
-            f"| light exhaustive (term/doc_id + 8-byte bm25, NO blobs) | {strategy_bytes['light_exhaustive_mb']} |",
+            f"| light exhaustive (term/doc_id + tf/dl, NO blobs) | {strategy_bytes['light_exhaustive_mb']} |",
             f"| payload exhaustive (adds position blobs) | {strategy_bytes['payload_exhaustive_mb']} |",
             f"| pruned buckets, all columns ({strategy_bytes['n_pruned_bucket_files']} of 64 bucket dirs) | {strategy_bytes['bucket_total_mb']} |",
             "",

@@ -32,6 +32,13 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
+def term_count(toks: Column, term: str) -> Column:
+    """Occurrences of ``term`` in the token array ``toks``."""
+    # single-parameter lambda: a 2-arg lambda would be read by Spark as
+    # the (element, index) form
+    return F.size(F.filter(toks, lambda x: x == F.lit(term)))
+
+
 def bpe_ish_token_count(text: Column) -> Column:
     """BPE-style subword count estimate: alnum runs + isolated symbols
     (regex split — still JVM-side)."""

@@ -252,7 +252,7 @@ def layout_segment(
     is written, and later segments never rewrite them.  The df>5 prune is
     NOT applied to the stored rows (it depends on the global df, which the
     next segment changes); it is enforced at query time by the terms-table
-    join (query.attach_scoring_stats inner semantics), which yields
+    join (query.query_terms_df inner semantics), which yields
     identical results — the kept rows are ~2% of postings (df≤5 terms hold
     ≤5 postings each; Zipf tail).
     """

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text_analysis import tokens
 from .indexer import simhash_udf
 
 # Affine MinHash parameters: h_i(x) = (A_i·x + B_i) mod P, P prime.
@@ -298,7 +299,7 @@ def shingles_df(
     tokens → one shingle of all tokens joined; otherwise the L−n+1
     sliding windows joined with single spaces.
     """
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    toks = tokens(F.col(text_col))
     shingle_arr = (
         F.when(F.size(toks) == 0, F.array().cast("array<string>"))
         .when(F.size(toks) < n, F.array(F.array_join(toks, " ")))

@@ -59,25 +59,31 @@ def bm25_expr(idf, tf, dl, avgdl):
 
         idf · (tf·(k1+1)) / (tf + k1·(1 − b + b·dl/avgdl))
 
-    DEFERRED SCORING: the persisted postings layout stores the
-    corpus-global-free pair (tf, dl) instead of a baked bm25 — at 100 TB a
-    materialized bm25 freezes idf/avgdl (corpus-global stats) into every
-    posting row, so ANY corpus append would invalidate and rewrite the
-    whole index.  Storing (tf, dl) makes appends touch only the new
-    segment's postings plus the small terms/corpus_stats tables
-    (corpus_io.append_to_index).  Consumers
-    materialize bm25 with this expression right after their (broadcast)
+    DEFERRED SCORING: postings store the corpus-global-free pair (tf, dl)
+    and never a baked bm25 — at 100 TB a materialized bm25 freezes
+    idf/avgdl (corpus-global stats) into every posting row, so ANY corpus
+    append would invalidate and rewrite the whole index.  Storing (tf, dl)
+    makes appends touch only the new segment's postings plus the small
+    terms/corpus_stats tables (corpus_io.append_to_index).  Every consumer
+    materializes bm25 with this expression right after its (broadcast)
     query-terms join — per-query cost is a fused multiply over already-
-    matched rows inside whole-stage codegen.
-
-    Operand order matches the former build-time materialization
-    (idf·num/den, left-to-right) so scores are bit-identical to the
-    round-2 layout.
+    matched rows inside whole-stage codegen.  It is the only copy of the
+    formula: the scan-time contract entries score with it too.
     """
     idf, tf, dl, avgdl = (
         F.col(c) if isinstance(c, str) else c for c in (idf, tf, dl, avgdl)
     )
     return idf * (tf * (K1 + 1)) / (tf + K1 * (1 - B + B * (dl / avgdl)))
+
+
+def idf_expr(n: int, df: str) -> Column:
+    """BM25+ IDF (reference indexing.py:162-171) of a term whose document
+    frequency is column ``df``, in a corpus of ``n`` docs:
+    ``log((n − df + 0.5) / (df + 0.5) + 1)``."""
+    df = F.col(df)
+    return F.log((F.lit(n) - df + 0.5) / (df + 0.5) + 1.0)
+
+
 MAX_DOC_CHARS = 800_000
 DF_PRUNE = 5
 DEFAULT_TERM_BUCKETS = 64
@@ -385,13 +391,7 @@ def finalize_terms(
     the ``term_bucket`` partition column shared with postings."""
     return (
         term_df.filter(F.col("df") > df_prune)
-        .withColumn(
-            "idf",
-            F.log(
-                (F.lit(n_total) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                + 1.0
-            ),
-        )
+        .withColumn("idf", idf_expr(n_total, "df"))
         .withColumn(
             "term_bucket",
             F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int"),
@@ -530,15 +530,16 @@ def score_and_layout(
     """df → IDF → df>5 prune → deferred-scoring block layout (pure JVM —
     positions arrive already varbyte-encoded from doc_postings_udf).
 
-    Returns ``(postings, blocks, terms)`` where postings carry (tf, dl)
-    and NO bm25 — consumers materialize it via :func:`bm25_expr` after
-    their terms join (idf/avgdl ride the broadcast query-terms frame, see
-    query.attach_scoring_stats).  Per-term attributes (df, idf) are
-    NORMALIZED OUT of the fat postings table into the compact ``terms``
-    table: repeating 8-byte per-term constants on every posting row
-    inflated the layout shuffle + parquet by ~30% for values any consumer
-    can re-join from a table 100× smaller (measured at 400k docs: 1.26 GB
-    layout exchange with them).
+    Returns ``(postings, blocks, terms)`` in the one postings layout,
+    which every reader (query, wand, the contract entries) consumes:
+    postings carry (tf, dl) and no bm25 — consumers materialize it via
+    :func:`bm25_expr` after their terms join (idf/avgdl ride the broadcast
+    query-terms frame, see query.query_terms_df).  Per-term attributes
+    (df, idf) are NORMALIZED OUT of the fat postings table into the
+    compact ``terms`` table: repeating 8-byte per-term constants on every
+    posting row inflated the layout shuffle + parquet by ~30% for values
+    any consumer can re-join from a table 100× smaller (measured at 400k
+    docs: 1.26 GB layout exchange with them).
 
     ``postings_raw`` must carry (term, doc_id, tf, positions_vb, doc_len);
     ``term_df`` is the (term, df) frame of :func:`term_doc_frequency`,
@@ -567,12 +568,10 @@ def score_and_layout(
     """
     terms = finalize_terms(term_df, n_total, df_prune, term_buckets)
 
-    # DEFERRED SCORING (see bm25_expr): the layout stores (tf, dl) and NO
-    # bm25 column — the df>5 prune is a LEFT SEMI join (no term attributes
-    # ride on the fat posting rows at all), so the bucket exchange carries
-    # 4 fewer bytes/row than the round-2 bm25 layout, and the whole layout
-    # branch has NO dependence on corpus-global stats (n_total/avgdl feed
-    # only the small terms/blocks tables).
+    # DEFERRED SCORING (see bm25_expr): the df>5 prune is a LEFT SEMI join
+    # (no term attributes ride on the fat posting rows at all), and the
+    # whole layout branch has NO dependence on corpus-global stats
+    # (n_total/avgdl feed only the small terms/blocks tables).
     layout = (
         postings_raw.join(F.broadcast(terms.select("term")), "term", "left_semi")
         .withColumn(
@@ -598,25 +597,7 @@ def score_and_layout(
         "block_id",
     )
 
-    # Block maxima: max over the idf-free length-normalized part g(tf, dl),
-    # scaled by idf afterwards on the ALREADY-AGGREGATED (small) frame —
-    # idf > 0 so max(idf·g) = idf·max(g).  The 1-ulp reassociation risk vs
-    # the query-time idf·num/den order is absorbed by wand.py's relative
-    # guard on every ub ≥ θ comparison.
-    g = bm25_expr(
-        F.lit(1.0), F.col("tf"), F.col("dl"), F.lit(float(avg_doc_len))
-    )
-    blocks = (
-        postings.groupBy("term_bucket", "term", "block_id")
-        .agg(F.max(g).alias("_max_g"))
-        .join(F.broadcast(terms.select("term", "idf")), "term")
-        .select(
-            "term_bucket",
-            "term",
-            "block_id",
-            (F.col("idf") * F.col("_max_g")).alias("block_max_bm25"),
-        )
-    )
+    blocks = block_maxima(postings, terms, avg_doc_len)
     return postings, blocks, terms
 
 
@@ -692,6 +673,33 @@ def write_index(
     write_blocks(index, out_dir)
 
 
+def block_maxima(
+    postings: DataFrame, terms: DataFrame, avg_doc_len: float
+) -> DataFrame:
+    """The block-max table: per (term_bucket, term, block_id), the largest
+    bm25 any posting in the block can score under the current idf/avgdl.
+
+    The max runs over the idf-free length-normalized part g(tf, dl) and is
+    scaled by idf afterwards on the ALREADY-AGGREGATED (small) frame —
+    idf > 0 so max(idf·g) = idf·max(g).  The 1-ulp reassociation risk vs
+    the query-time idf·num/den order is absorbed by wand.py's relative
+    guard on every ub ≥ θ comparison."""
+    g = bm25_expr(
+        F.lit(1.0), F.col("tf"), F.col("dl"), F.lit(float(avg_doc_len))
+    )
+    return (
+        postings.groupBy("term_bucket", "term", "block_id")
+        .agg(F.max(g).alias("_max_g"))
+        .join(F.broadcast(terms.select("term", "idf")), "term")
+        .select(
+            "term_bucket",
+            "term",
+            "block_id",
+            (F.col("idf") * F.col("_max_g")).alias("block_max_bm25"),
+        )
+    )
+
+
 def write_blocks(index: dict[str, DataFrame], out_dir: str) -> None:
     """(Re)derive the block-max table from the WRITTEN postings files (a
     narrow columnar re-read beats re-evaluating the scoring subtree) and
@@ -700,28 +708,10 @@ def write_blocks(index: dict[str, DataFrame], out_dir: str) -> None:
     this small derived table (≤ |terms|·n_blocks rows) is recomputed — the
     fat postings stay untouched."""
     spark = index["postings"].sparkSession
-    written = spark.read.parquet(f"{out_dir}/postings")
-    if "bm25" in written.columns:  # legacy materialized-score layout
-        blocks = written.groupBy("term_bucket", "term", "block_id").agg(
-            F.max("bm25").alias("block_max_bm25")
-        )
-    else:
-        avgdl = float(
-            index["corpus_stats"].select("avg_doc_len").collect()[0][0]
-        )
-        g = bm25_expr(F.lit(1.0), F.col("tf"), F.col("dl"), F.lit(avgdl))
-        blocks = (
-            written.groupBy("term_bucket", "term", "block_id")
-            .agg(F.max(g).alias("_max_g"))
-            .join(F.broadcast(index["terms"].select("term", "idf")), "term")
-            .select(
-                "term_bucket",
-                "term",
-                "block_id",
-                (F.col("idf") * F.col("_max_g")).alias("block_max_bm25"),
-            )
-        )
-    blocks.write.mode("overwrite").parquet(f"{out_dir}/blocks")
+    avgdl = index["corpus_stats"].select("avg_doc_len").collect()[0][0]
+    block_maxima(
+        spark.read.parquet(f"{out_dir}/postings"), index["terms"], avgdl
+    ).write.mode("overwrite").parquet(f"{out_dir}/blocks")
 
 
 def unpersist_index(index: dict[str, DataFrame]) -> None:

@@ -51,15 +51,17 @@ def query_terms_df(
     * ``term_bucket`` via the vendored :func:`xxhash64_str` (JVM-parity
       locked by tests/test_hashing.py) instead of a ``withColumn`` the
       executors evaluate;
-    * with ``index`` on a deferred-scoring (tf, dl) layout, (idf, avgdl)
-      are fused INTO the created rows — one literal-pruned scan of the
-      bucketed terms table for idf (the only job), avgdl cached on the
-      index dict across batches.  INNER semantics: a query term absent
-      from the terms table (df-pruned, O-19) is dropped here, so its
-      postings — which MAY exist on disk under the unpruned append
-      layout (corpus_io.append_to_index) — never enter the retrieval
-      join; identical results to pruned storage (same matched rows,
-      match_count, scores);
+    * with ``index`` (its ``terms`` and ``corpus_stats`` tables), the
+      (idf, avgdl) that :func:`ensure_bm25` scores the (tf, dl) postings
+      with are fused INTO the created rows — one literal-pruned scan of
+      the bucketed terms table for idf (the only job), avgdl cached on
+      the index dict across batches.  Every scoring reader needs them;
+      without ``index`` the frame only serves bucket lookups.  INNER
+      semantics: a query term absent from the terms table (df-pruned,
+      O-19) is dropped here, so its postings — which MAY exist on disk
+      under the unpruned append layout (corpus_io.append_to_index) —
+      never enter the retrieval join; identical results to pruned
+      storage (same matched rows, match_count, scores);
     * the distinct (term_bucket, term) pairs ride along as
       ``df._pruning_pairs`` so :func:`pruned_postings` never needs a
       ``distinct().collect()`` job to recover what the driver already
@@ -85,7 +87,7 @@ def query_terms_df(
         "qnum int, term string, is_original boolean, is_tueb boolean, "
         "term_bucket int"
     )
-    if index is not None and "bm25" not in index["postings"].columns:
+    if index is not None:
         pairs = sorted({(r[4], r[1]) for r in rows})
         idf_map = _idf_lut(index, pairs)
         avgdl = _cached_avgdl(index)
@@ -129,26 +131,6 @@ def _cached_avgdl(index: dict[str, DataFrame]) -> float:
     return index["_avgdl"]
 
 
-def attach_scoring_stats(
-    terms: DataFrame, index: dict[str, DataFrame]
-) -> DataFrame:
-    """Attach (idf, avgdl) to an ARBITRARY query-terms frame for
-    deferred-scoring (tf, dl) postings layouts (see indexer.bm25_expr),
-    with the df>5 inner-join semantics documented in
-    :func:`query_terms_df` (which fuses these columns driver-side and is
-    the fast path — this broadcast-join form remains for terms frames not
-    built by it)."""
-    rows = pruned_postings(index["terms"], terms).select("term", "idf").collect()
-    lut = local_frame(
-        terms.sparkSession,
-        [(r.term, float(r.idf)) for r in rows],
-        "term string, idf double",
-    )
-    return terms.join(F.broadcast(lut), "term", "inner").withColumn(
-        "avgdl", F.lit(_cached_avgdl(index))
-    )
-
-
 def pruned_postings(postings: DataFrame, terms: DataFrame) -> DataFrame:
     """Static pushdown for the retrieval scan: the compiled query terms are
     driver-side and tiny, so emit literal ``term_bucket IN (...)`` and
@@ -173,24 +155,15 @@ def pruned_postings(postings: DataFrame, terms: DataFrame) -> DataFrame:
     )
 
 
-def score_cols(postings: DataFrame) -> list[str]:
-    """The columns a scoring scan must read: the materialized bm25 on
-    legacy layouts, the (tf, dl) pair under deferred scoring."""
-    return ["bm25"] if "bm25" in postings.columns else ["tf", "dl"]
-
-
 def ensure_bm25(matched: DataFrame) -> DataFrame:
-    """Materialize bm25 on a postings⨝query-terms frame when the layout
-    defers scoring (indexer.bm25_expr over tf/dl/idf/avgdl, all present
-    post-join via attach_scoring_stats); pass-through when the postings
-    already carry bm25.  Scratch columns are dropped either way."""
+    """Materialize bm25 on a postings⨝query-terms frame
+    (indexer.bm25_expr over tf/dl/idf/avgdl, all present post-join via
+    :func:`query_terms_df`) and drop the scratch columns."""
     from .indexer import bm25_expr
 
-    if "bm25" not in matched.columns:
-        matched = matched.withColumn(
-            "bm25", bm25_expr("idf", "tf", "dl", "avgdl")
-        )
-    return matched.drop("tf", "dl", "idf", "avgdl")
+    return matched.withColumn(
+        "bm25", bm25_expr("idf", "tf", "dl", "avgdl")
+    ).drop("tf", "dl", "idf", "avgdl")
 
 
 def _with_minmax(df: DataFrame, col: str, lo: str, hi: str) -> DataFrame:
@@ -284,7 +257,7 @@ def rank(
     postings = pruned_postings(postings, terms)
     matched = ensure_bm25(
         postings.select(
-            "term_bucket", "term", "doc_id", *score_cols(postings)
+            "term_bucket", "term", "doc_id", "tf", "dl"
         ).join(F.broadcast(terms), ["term_bucket", "term"], "inner")
     )
     if prefilter is not None:

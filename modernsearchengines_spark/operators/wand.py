@@ -41,24 +41,28 @@ from ..session import local_frame
 
 
 def _qterm_side(terms: DataFrame):
-    """Broadcast side of the retrieval join; carries (idf, avgdl) when the
-    query-terms frame was enriched for a deferred-scoring layout
-    (query.attach_scoring_stats)."""
-    cols = ["term_bucket", "term", "qnum"]
-    if "idf" in terms.columns:
-        cols += ["idf", "avgdl"]
-    return F.broadcast(terms.select(*cols))
+    """Broadcast side of the retrieval join, with the (idf, avgdl) that
+    query.query_terms_df fuses in for scoring the (tf, dl) postings."""
+    return F.broadcast(
+        terms.select("term_bucket", "term", "qnum", "idf", "avgdl")
+    )
+
+
+def _scored(postings: DataFrame, terms: DataFrame, *cols: str) -> DataFrame:
+    """The query terms' postings with bm25 materialized: the bucket-pruned
+    scan of (term_bucket, term, doc_id, *cols, tf, dl) joined with the
+    broadcast query-terms side."""
+    from .query import ensure_bm25, pruned_postings
+
+    return ensure_bm25(
+        pruned_postings(postings, terms)
+        .select("term_bucket", "term", "doc_id", *cols, "tf", "dl")
+        .join(_qterm_side(terms), ["term_bucket", "term"])
+    )
 
 
 def _matched(postings: DataFrame, terms: DataFrame) -> DataFrame:
-    from .query import ensure_bm25, pruned_postings, score_cols
-
-    postings = pruned_postings(postings, terms)
-    return ensure_bm25(
-        postings.select(
-            "term_bucket", "term", "doc_id", *score_cols(postings)
-        ).join(_qterm_side(terms), ["term_bucket", "term"])
-    ).select("qnum", "doc_id", "bm25")
+    return _scored(postings, terms).select("qnum", "doc_id", "bm25")
 
 
 def _ub_and_exact(
@@ -68,29 +72,25 @@ def _ub_and_exact(
     ub_extra: float = 0.0,
 ) -> DataFrame:
     """The fused phase-A/B pass: ONE narrow scan of the light posting
-    columns (term, doc_id, block_id, bm25 — positions blobs stay unread via
-    Parquet column pruning) joined with the compact blocks table, then ONE
+    columns (term, doc_id, block_id, tf, dl — positions blobs stay unread
+    via Parquet column pruning) joined with the compact blocks table, then ONE
     per-(qnum, doc_id) aggregation producing BOTH
 
       ``ub``       = Σ_t block_max(t, block_t(d)) + ub_extra   (upper bound)
       ``bm25_sum`` = Σ_t bm25(t, d)                            (exact light score)
 
-    Carrying the 8-byte bm25 column through the ub pass costs ~nothing and
+    Carrying the per-row bm25 through the ub pass costs ~nothing and
     collapses the round-2 design's separate exact-scoring scan: the seed
     threshold θ and (for pure-BM25 scoring) the final scores come from this
     same frame, so the light pruned path runs ONE scan total and the payload
     pruned path saves its phase-B fat scan."""
-    from .query import ensure_bm25, pruned_postings, score_cols
-
-    postings = pruned_postings(postings, terms)
-    t = _qterm_side(terms)
-    narrow = ensure_bm25(
-        postings.select(
-            "term_bucket", "term", "doc_id", "block_id", *score_cols(postings)
-        ).join(t, ["term_bucket", "term"])
-    ).select("qnum", "term_bucket", "term", "doc_id", "block_id", "bm25")
-    b = blocks.join(t.select("term_bucket", "term").distinct(),
-                    ["term_bucket", "term"])
+    narrow = _scored(postings, terms, "block_id").select(
+        "qnum", "term_bucket", "term", "doc_id", "block_id", "bm25"
+    )
+    b = blocks.join(
+        _qterm_side(terms).select("term_bucket", "term").distinct(),
+        ["term_bucket", "term"],
+    )
     return (
         narrow.join(F.broadcast(b), ["term_bucket", "term", "block_id"])
         .groupBy("qnum", "doc_id")
@@ -254,15 +254,9 @@ def _payload_scores(
 
 
 def _matched_payload(postings: DataFrame, terms: DataFrame) -> DataFrame:
-    from .query import ensure_bm25, pruned_postings, score_cols
-
-    postings = pruned_postings(postings, terms)
-    return ensure_bm25(
-        postings.select(
-            "term_bucket", "term", "doc_id", "positions_vb",
-            *score_cols(postings),
-        ).join(_qterm_side(terms), ["term_bucket", "term"])
-    ).select("qnum", "doc_id", "bm25", "positions_vb")
+    return _scored(postings, terms, "positions_vb").select(
+        "qnum", "doc_id", "bm25", "positions_vb"
+    )
 
 
 def bm25_prox_topk_exhaustive(
@@ -278,7 +272,7 @@ def bm25_prox_topk_exhaustive(
 
 def _cascade_agg(postings: DataFrame, terms: DataFrame, alpha: float) -> DataFrame:
     """Fused first-stage pass for payload pruning: one NARROW scan (term,
-    doc_id, bm25 — blobs unread) and one per-(qnum, doc_id) aggregation
+    doc_id, tf, dl — blobs unread) and one per-(qnum, doc_id) aggregation
     producing the exact light score and the tightest sound payload upper
     bound available without touching positions:
 
@@ -349,7 +343,7 @@ def bm25_prox_topk_wand(
         seeds only).  Right when the scorer is so expensive that every
         avoided candidate matters more than one extra small job.
 
-    Phase C scans blobs ONLY (no bm25 column — Σ bm25 rides in from the
+    Phase C scans blobs ONLY (no scoring columns — Σ bm25 rides in from the
     narrow pass), semi-joined to candidates, so the expensive stage's rows
     shrink by the pruning ratio.
     """

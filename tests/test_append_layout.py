@@ -1,6 +1,6 @@
 """An index created by append_to_index ≡ classic build_index + write_index:
 identical query results despite the unpruned append layout (the df>5 prune
-moves to query time via attach_scoring_stats inner semantics)."""
+moves to query time via query_terms_df inner semantics)."""
 
 from __future__ import annotations
 

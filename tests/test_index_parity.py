@@ -91,10 +91,10 @@ def test_postings_match_oracle(spark_index, oracle_index):
     # live in the normalized terms table, not on every posting row.  Under
     # deferred scoring (indexer.bm25_expr) bm25 itself is NOT materialized
     # either: consumers compute it post-join from (tf, dl, idf, avgdl).
-    assert "positions" not in spark_index["postings"].columns
-    assert "df" not in spark_index["postings"].columns
-    assert "idf" not in spark_index["postings"].columns
-    assert "bm25" not in spark_index["postings"].columns
+    assert spark_index["postings"].columns == [
+        "term_bucket", "term", "doc_id", "tf", "dl", "positions_vb",
+        "block_id",
+    ]
     avgdl = float(
         spark_index["corpus_stats"].select("avg_doc_len").collect()[0][0]
     )

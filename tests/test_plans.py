@@ -6,6 +6,7 @@ regression here means a full-scan or row-at-a-time Python stage snuck in.
 
 from __future__ import annotations
 
+import itertools
 import re
 
 import pytest
@@ -160,3 +161,33 @@ def test_bm25_topk_filters_terms_before_tf_shuffle(spark):
     executed = df._jdf.queryExecution().executedPlan().toString()
     assert "Generate" not in executed
     assert "TakeOrderedAndProject" in executed
+
+
+def test_payload_index_filters_terms_below_position_aggregation(spark):
+    """The pruned top-k entries read the engine's one postings layout
+    ((tf, dl), no materialized bm25), and only the query terms' positions
+    are collected: the term filter sits below the (doc_id, term)
+    position aggregation, not in a join above it."""
+    postings, _, _ = entrymod._payload_index(spark, SF_DIR)
+    assert postings.columns == [
+        "term_bucket", "term", "doc_id", "tf", "dl", "positions_vb",
+        "block_id",
+    ]
+    plan = postings._jdf.queryExecution().optimizedPlan().toString()
+    lines = plan.splitlines()
+    nodes = [ln.lstrip(" :+-") for ln in lines]
+    depth = [len(ln) - len(n) for ln, n in zip(lines, nodes)]
+    agg = next(
+        i for i, n in enumerate(nodes)
+        if n.startswith("Aggregate") and "collect_list" in n
+    )
+    below = range(agg + 1, len(lines))
+    subtree = [
+        nodes[j] for j in itertools.takewhile(
+            lambda j: depth[j] > depth[agg], below
+        )
+    ]
+    assert any(
+        n.startswith("Filter") and "IN (spark,join,merge,window)" in n
+        for n in subtree
+    ), plan
